@@ -1288,14 +1288,7 @@ class NativePipeline:
         - ``exact_py`` — the applyInPandasWithState reference op
           (running-min state; per-row emission without watermark flush).
         Output is the append-mode (id, band, partner) stream — finalize on
-        the sink read-back with streaming.neardup.finalize_neardup.
-
-        r6: ``builtin`` (dropDuplicates keeper + join, first-ARRIVED
-        anchor) is retired from the spec surface — superseded by ``jvm``,
-        which is equally all-JVM but min-id-exact under any partitioning;
-        exposing the order-dependent variant invited users to pick it for
-        one fewer window knob (r5 verdict #2). The function remains in
-        streaming/neardup.py (deprecated, test-only)."""
+        the sink read-back with streaming.neardup.finalize_neardup."""
         k = int(body.get("k", 16))
         bands_n = int(body.get("bands", 4))
         n = int(body.get("n", 2))
@@ -1308,17 +1301,6 @@ class NativePipeline:
             self._watermarked = True
 
         impl = body.get("impl", "jvm")
-        if impl == "exact":
-            # pre-r5 name for the applyInPandasWithState op (then the
-            # default). Falling through to jvm would silently change flush
-            # semantics (windowed-agg emission vs per-row) — map it.
-            impl = "exact_py"
-        if impl == "builtin":
-            raise ValueError(
-                "neardup impl 'builtin' is deprecated (first-arrived anchor "
-                "is order-dependent); use 'jvm' — all-JVM and min-id-exact "
-                "under any partitioning"
-            )
         if impl not in ("jvm", "exact_py"):
             raise ValueError(f"neardup impl {impl!r} not one of jvm/exact_py")
         lookback = body.get("lookback", "24 hours")

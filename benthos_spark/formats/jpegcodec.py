@@ -627,8 +627,10 @@ def _decode_scan(
     # pre-split/unstuffed once, every symbol is one 16-bit peek + one
     # cached-LUT lookup, the accumulator refills 4 bytes at a time, and
     # the per-block 2x matmul IDCT runs as ONE einsum per component over
-    # all blocks at the end. Byte-identical pixels (same coefficients,
-    # same arithmetic — roundtrip + high-frequency tests unchanged);
+    # all blocks at the end. The coefficients are unchanged, but einsum
+    # may sum the float64 IDCT in a different order than the per-block
+    # matmul, so pixels are not bit-identical in general: the roundtrip
+    # and high-frequency tests pin them equal on the fixture corpus;
     # measured 0.14 -> 0.70 Mpx/s (5x) on the fixture corpus (scripts/jpeg_decode_bench.py).
     luts = {}
     for key, (bits, values) in huff.items():

@@ -205,7 +205,6 @@ def _iter_record_spans(b: bytes) -> Iterator[Tuple[int, int, bool]]:
     i = 0
     n = len(b)
     while i < n:
-        start = i
         while i < n and b[i : i + 2] == _CRLF:
             i += 2
         if i >= n:

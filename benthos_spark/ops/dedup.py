@@ -1,4 +1,5 @@
-"""Deduplication suite for training-data pipelines — all native Catalyst.
+"""Deduplication suite for training-data pipelines — native Catalyst,
+except the MinHash signature, which an Arrow-batched kernel computes.
 
 Five strategies, each a ``queries()`` entry with a DuckDB oracle:
 - exact: hash-groupBy on normalized text, keep min id. One shuffle.
@@ -20,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .textprep import (
-    MINHASH_LANES,
     exploded_shingles,
     md5_60bit,
     norm_text,
@@ -69,13 +69,24 @@ def ngram_jaccard_pairs(
     return out
 
 
-def _minhash_wide_arrow(
-    docs: DataFrame, k: int, n: int, text_col: str, id_col: str
+def minhash_wide(
+    docs: DataFrame, k: int = 16, n: int = 3, text_col: str = "text",
+    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Wide signatures via an Arrow kernel (hashlib C md5, shared
-    py_minhash_signature formula) — zero shuffle, ~2.5x faster than the
-    Catalyst explode+HOF+agg path whose shingle lambdas are interpreted.
-    Docs with < n tokens emit no row, like the explode path."""
+    """Wide MinHash signature via k-lanes-per-digest: hash h = lane (h % 4)
+    of md5('(h//4)|shingle'), each lane the 28-bit value of 7 hex digits.
+    One md5 call yields FOUR hash lanes, so k=16 costs 4 digest computations
+    per shingle instead of 16 (round-2 verdict: the k independent md5 calls
+    were the dominant cost of the heaviest batch query). 28-bit lanes add
+    ~n_shingles/2^28 collision bias per lane — negligible at any realistic
+    per-doc shingle count, and a band key still concatenates r lanes.
+    Returns (id, m0..m{k-1}); same formula expressed in the DuckDB oracle.
+
+    The per-shingle min folds inside an Arrow kernel (hashlib C md5, the
+    shared py_minhash_signature formula): zero shuffle, and ~2.5x faster
+    than a Catalyst explode+HOF+agg plan, whose shingle lambdas are
+    interpreted per element. Docs with < n tokens emit no row, exactly like
+    an empty ``exploded_shingles`` set."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -100,56 +111,12 @@ def _minhash_wide_arrow(
     ).mapInPandas(kernel, schema)
 
 
-def minhash_wide(
-    docs: DataFrame, k: int = 16, n: int = 3, text_col: str = "text",
-    id_col: str = "doc_id", impl: str = "arrow",
-) -> DataFrame:
-    """Wide MinHash signature via k-lanes-per-digest: hash h = lane (h % 4)
-    of md5('(h//4)|shingle'), each lane the 28-bit value of 7 hex digits.
-    One md5 call yields FOUR hash lanes, so k=16 costs 4 digest computations
-    per shingle instead of 16 (round-2 verdict: the k independent md5 calls
-    were the dominant cost of the heaviest batch query). 28-bit lanes add
-    ~n_shingles/2^28 collision bias per lane — negligible at any realistic
-    per-doc shingle count, and a band key still concatenates r lanes.
-    Returns (id, m0..m{k-1}); same formula expressed in the DuckDB oracle.
-
-    ``impl="arrow"`` (default) folds the per-shingle min inside an Arrow
-    kernel (zero shuffle, hashlib C md5 — the shingle HOF lambdas of the
-    Catalyst path are interpreted per element and dominate its cost).
-    ``impl="sql"`` keeps the zero-Python Catalyst path, whose plan shape
-    is: digests materialize in ONE Project under ONE HashAggregate
-    with k min(LONG) columns over the exploded shingles. min over hex
-    STRINGS would be a SortAggregate (var-length agg buffers are not
-    hash-aggregatable) and a k-way row explosion would put k x rows through
-    the shuffle — both measured significantly slower. Both impls produce
-    identical rows (tested)."""
-    if impl == "arrow":
-        return _minhash_wide_arrow(docs, k, n, text_col, id_col)
-    sh = exploded_shingles(docs, n, text_col, id_col)
-    n_salts = (k + MINHASH_LANES - 1) // MINHASH_LANES
-    proj = sh.select(
-        "id",
-        *[
-            F.md5(F.concat(F.lit(f"{salt}|"), F.col("s"))).alias(f"_d{salt}")
-            for salt in range(n_salts)
-        ],
-    )
-    aggs = []
-    for h in range(k):
-        salt, lane = divmod(h, MINHASH_LANES)
-        lane_col = F.conv(
-            F.substring(F.col(f"_d{salt}"), 1 + 7 * lane, 7), 16, 10
-        ).cast("long")
-        aggs.append(F.min(lane_col).alias(f"m{h}"))
-    return proj.groupBy("id").agg(*aggs)
-
-
 def minhash_signatures(
     docs: DataFrame, k: int = 16, n: int = 3, text_col: str = "text",
-    id_col: str = "doc_id", impl: str = "arrow",
+    id_col: str = "doc_id",
 ) -> DataFrame:
     """(id, h, sig) long-form view of minhash_wide (for inspection/tests)."""
-    wide = minhash_wide(docs, k, n, text_col, id_col, impl=impl)
+    wide = minhash_wide(docs, k, n, text_col, id_col)
     return wide.select(
         "id",
         F.expr(

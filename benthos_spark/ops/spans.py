@@ -10,8 +10,8 @@ window, hash each span (md5 — engine-portable, so the DuckDB oracle shares
 the exact formula), mark spans whose hash occurs in MORE THAN ONE document,
 and report per-doc counts plus the duplicated fraction.
 
-Scale shape: tokenization and span hashing are per-row collection lambdas
-inside codegen (no Python); only (doc_id, 16-byte span hash) rows shuffle —
+Scale shape: tokenization and span hashing run in one Arrow-batched
+kernel (hashlib's C md5); only (doc_id, 16-byte span hash) rows shuffle —
 one hash aggregation over span hashes plus one hash join back, the same
 discipline as the C4 duplicate-line op (`textstats.duplicate_line_stats`).
 Text never shuffles. At 100 TB the span-hash table is the working set;
@@ -23,29 +23,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def _span_hashes(text_col: str, k: int):
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), " "), lambda x: x != ""
-    )
-    n = F.size(toks)
-    starts = F.when(n >= k, F.sequence(F.lit(1), n - k + 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    # r6: 16-byte digest BYTES, not the 32-char hexdigest — the hash is
-    # internal (only counts leave the op), so the shuffled key halves and
-    # the hex conversion disappears, at identical collision safety
-    return F.transform(
-        starts, lambda i: F.unhex(F.md5(F.array_join(F.slice(toks, i, k), " ")))
-    )
-
-
 def _span_hash_rows_arrow(
     docs: DataFrame, text_col: str, id_col: str, k: int
 ) -> DataFrame:
     """(id, h) span-hash rows via an Arrow-batched kernel — hashlib's C md5
-    instead of interpreted collection lambdas (~12 us/span measured for the
-    HOF path vs ~2 us here); same digest, NULL h for docs shorter than
-    k tokens (mirrors explode_outer)."""
+    instead of interpreted collection lambdas (~12 us/span measured for a
+    Catalyst HOF path vs ~2 us here). The 16-byte digest BYTES, not the
+    32-char hexdigest, are the key: the hash is internal (only counts leave
+    the op), so the shuffled key is half as wide at identical collision
+    safety. NULL h for docs shorter than k tokens (mirrors explode_outer)."""
     import hashlib
 
     import pandas as pd
@@ -82,24 +68,12 @@ def duplicate_span_stats(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 8,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(id, n_spans, n_dup_spans, dup_fraction): per-document count of
     k-token spans, how many of them also occur verbatim in at least one
     OTHER document, and the duplicated fraction (0.0 for docs shorter
-    than k tokens).
-
-    ``impl="arrow"`` (default) hashes spans in an Arrow kernel;
-    ``impl="sql"`` keeps the pure-Catalyst collection-lambda path (HOF
-    lambdas are interpreted per element — correct but slower; kept as the
-    zero-Python variant and for plan tests). Both produce identical rows."""
-    if impl == "arrow":
-        spans = _span_hash_rows_arrow(docs, text_col, id_col, k)
-    else:
-        spans = docs.select(
-            F.col(id_col).alias("id"),
-            F.explode_outer(_span_hashes(text_col, k)).alias("h"),
-        )
+    than k tokens)."""
+    spans = _span_hash_rows_arrow(docs, text_col, id_col, k)
     # r6: the span frame feeds BOTH the cross-doc count agg and the
     # join-back — without materialization the hashing kernel runs twice
     # (2 MapInPandas nodes in the plan). (id, 16-byte hash) rows are the

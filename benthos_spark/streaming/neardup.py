@@ -17,7 +17,7 @@ Physical plan, stream-shaped end to end:
    oracle can recompute it). The batch op's groupBy-over-shingles cannot
    run mid-stream; the kernel folds the per-shingle min inside the row.
    Emits ``bands`` rows per doc: (id, ts, band, band_key).
-2. one stateful stage, three interchangeable implementations emitting the
+2. one stateful stage, two interchangeable implementations emitting the
    same (id, band, partner) shape:
    - ``streaming_neardup_jvm`` (DEFAULT, the 100 TB path) — all-JVM and
      min-id-exact under any partitioning: built-in windowed min(id)
@@ -25,8 +25,6 @@ Physical plan, stream-shaped end to end:
    - ``streaming_neardup`` — applyInPandasWithState reference
      implementation (exact running-min state; the semantics oracle, and
      the only variant whose per-row emission needs no watermark flush).
-   - ``streaming_neardup_builtin`` — dropDuplicates keeper + join;
-     fastest but first-ARRIVED anchor (order-dependent), opt-in.
 3. ``finalize_neardup`` — stateless read-side view over the sink:
    per-doc min(partner) -> (doc_id, anchor, is_keeper).
 
@@ -170,8 +168,8 @@ def streaming_neardup_jvm(
     ts_col: str = "ts",
 ) -> DataFrame:
     """All-JVM **exact** variant of :func:`streaming_neardup` — the default
-    scale path: no Python anywhere in the stateful chain, and, unlike
-    :func:`streaming_neardup_builtin`, min-id-exact under ANY partitioning.
+    scale path: no Python anywhere in the stateful chain, and min-id-exact
+    under ANY partitioning.
 
     Formulation: a per-bucket **windowed min aggregation** feeds a
     stream-stream join. ``min(id)`` per (band, band_key, event-time window)
@@ -188,8 +186,8 @@ def streaming_neardup_jvm(
     window with start <= d's ts, and that window's min m <= e is itself a
     valid earlier partner, so min over matched window-mins == e. Within-
     micro-batch encounter order never matters because ``min`` is
-    order-insensitive — this is what makes the variant exact where
-    ``dropDuplicates``' first-arrived keeper is not.
+    order-insensitive — a first-arrived keeper (``dropDuplicates``) would
+    not be.
 
     State & output bounds: agg state is one long per live (bucket, window),
     GC'd when the watermark passes the window end; join state is bounded by
@@ -226,74 +224,6 @@ def streaming_neardup_jvm(
         "id",
         "band",
         F.when(F.col("m_id") < F.col("id"), F.col("m_id")).alias("partner"),
-    )
-
-
-def streaming_neardup_builtin(
-    band_rows: DataFrame,
-    watermark: str = "30 minutes",
-    lookback: str = "24 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """DEPRECATED (r6, test-only): superseded by
-    :func:`streaming_neardup_jvm`, which is equally all-JVM but
-    min-id-exact under ANY partitioning; this variant's keeper is the
-    bucket's first-ARRIVED row, an order-dependent answer. Not exposed by
-    the spec stage anymore (engine/_c_neardup rejects ``impl: builtin``).
-
-    All-JVM variant of :func:`streaming_neardup` — no Python in the
-    stateful path, the 100 TB shape: ``dropDuplicates`` (built-in stateful
-    dedupe) keeps the FIRST row per (band, band_key) bucket — in-order,
-    that is the bucket's min id — and a stream-stream self-join attaches
-    that keeper to every arriving row of the same bucket within
-    ``lookback`` of event time (the join's time bound is what lets Spark
-    GC join state; it is the analog of the Python op's ``gc_idle_s``).
-
-    Output shape matches streaming_neardup: (id, band, partner), partner
-    NULL when the row IS the bucket keeper. Same finalize applies.
-
-    State is bounded on BOTH stateful ops: ``dropDuplicatesWithinWatermark``
-    evicts a bucket's keeper entry once the watermark passes its event time
-    plus the delay (plain ``dropDuplicates`` would grow keeper state forever
-    — Spark only GCs dedupe state when the event-time column is part of the
-    subset), and the join's time bound evicts join state after ``lookback``.
-    Eviction from the DEDUPE state is harmless through ``finalize_neardup``:
-    a bucket whose keeper entry expired re-emits a later row as a fresh
-    keeper, but the ORIGINAL keeper stays matchable in JOIN state for the
-    full ``lookback``, so every doc still sees the bucket's minimum id and
-    the read-side ``min(partner)`` is unchanged — the only effect is extra
-    (benign) keeper rows in the raw band output.
-
-    SEMANTICS CAVEAT: the keeper is the bucket's first-ARRIVED row —
-    within a parallel micro-batch, encounter order is arbitrary, so this
-    variant is only min-id-deterministic under ordered single-partition
-    arrival. The applyInPandasWithState op sorts within the batch and
-    keeps true min-id state, so it is exact under any partitioning; use
-    it when results must be reproducible row-for-row (the oracle query
-    does). This variant is the throughput path: per-bucket state lives in
-    the JVM state store with no per-group Python invocation (the Python
-    op pays ~0.5 ms per live bucket per micro-batch), at the cost of
-    keeper rows ALSO buffering in join state for ``lookback``."""
-    wm = band_rows.withWatermark(ts_col, watermark)
-    keepers = wm.dropDuplicatesWithinWatermark(["band", "band_key"]).select(
-        F.col("id").alias("k_id"),
-        F.col(ts_col).alias("k_ts"),
-        F.col("band").alias("k_band"),
-        F.col("band_key").alias("k_band_key"),
-    )
-    joined = wm.join(
-        keepers,
-        F.expr(
-            f"band = k_band AND band_key = k_band_key "
-            f"AND k_ts <= {ts_col} "
-            f"AND k_ts >= {ts_col} - interval {lookback}"
-        ),
-        "inner",
-    )
-    return joined.select(
-        "id",
-        "band",
-        F.when(F.col("k_id") < F.col("id"), F.col("k_id")).alias("partner"),
     )
 
 

@@ -100,14 +100,27 @@ class TestCrossEngineFuzz:
         _compare("boilerplate", sp, duck,
                  ["n_lines", "n_kept", "kept_ratio", "cleaned", "has_lorem"])
 
-    def test_spans(self, corpus):
+    def test_spans(self, spark, corpus):
         from benthos_spark.ops.spans import duplicate_span_stats, sql_span_ctes
 
         df, con = corpus
-        sp = duplicate_span_stats(df, text_col="s", id_col="i", k=3).collect()
-        duck = con.execute(
-            "with " + sql_span_ctes("s", "corpus", "i", k=3).lstrip()
-            + " select id, n_spans, n_dup_spans, dup_fraction from c"
-        ).fetchall()
-        _compare("spans", sp, duck,
-                 ["n_spans", "n_dup_spans", "dup_fraction"])
+        # crafted rows on top of the fuzz strings: an 8-token span shared by
+        # two docs, a doc with no shared span, a short doc and a NULL text
+        extra = [
+            (N + 1, "a b c d e f g h i j common span of eight tokens here x"),
+            (N + 2, "zz common span of eight tokens here yy and more words"),
+            (N + 3, "totally different text with enough tokens to span okay"),
+            (N + 4, "short doc"),
+            (N + 5, None),
+        ]
+        df = df.union(spark.createDataFrame(extra, "i long, s string"))
+        con.execute("create or replace table span_corpus as select * from corpus")
+        con.executemany("insert into span_corpus values (?, ?)", extra)
+        for k in (3, 8):
+            sp = duplicate_span_stats(df, text_col="s", id_col="i", k=k).collect()
+            duck = con.execute(
+                "with " + sql_span_ctes("s", "span_corpus", "i", k=k).lstrip()
+                + " select id, n_spans, n_dup_spans, dup_fraction from c"
+            ).fetchall()
+            _compare(f"spans k={k}", sp, duck,
+                     ["n_spans", "n_dup_spans", "dup_fraction"])

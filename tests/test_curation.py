@@ -76,21 +76,47 @@ class TestStratifiedSample:
         assert "WindowGroupLimit" in plan
 
 
+def _signatures_from_catalyst_shingles(docs, k, n):
+    """Expected minhash_wide rows: the shingles come from Catalyst
+    (``exploded_shingles``, the tokenizer ``ngram_jaccard_pairs`` runs) and
+    are folded here with hashlib md5 lanes — so the Arrow kernel's Python
+    tokenizer is checked against the Catalyst one, not against itself."""
+    import hashlib
+
+    from benthos_spark.ops.textprep import MINHASH_LANES, exploded_shingles
+
+    sigs = {}
+    for r in exploded_shingles(docs, n).collect():
+        sig = sigs.setdefault(r["id"], [None] * k)
+        digests = [
+            hashlib.md5(f"{salt}|{r['s']}".encode()).hexdigest()
+            for salt in range((k + MINHASH_LANES - 1) // MINHASH_LANES)
+        ]
+        for h in range(k):
+            salt, lane = divmod(h, MINHASH_LANES)
+            v = int(digests[salt][7 * lane : 7 * lane + 7], 16)
+            if sig[h] is None or v < sig[h]:
+                sig[h] = v
+    return {(i, *sig) for i, sig in sigs.items()}
+
+
+@pytest.mark.spark
 class TestMinhashImplEquivalence:
-    def test_arrow_equals_sql_minhash_wide(self, spark):
+    def test_minhash_wide_equals_catalyst_shingles(self, spark):
         from benthos_spark.ops.dedup import minhash_wide
 
         docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        a = {tuple(r) for r in minhash_wide(docs, k=16, n=2, impl="arrow").collect()}
-        b = {tuple(r) for r in minhash_wide(docs, k=16, n=2, impl="sql").collect()}
-        assert a == b and len(a) > 0
+        got = {tuple(r) for r in minhash_wide(docs, k=16, n=2).collect()}
+        assert got == _signatures_from_catalyst_shingles(docs, 16, 2)
+        assert len(got) > 0
 
-    def test_arrow_equals_sql_on_adversarial_text(self, spark):
+    def test_minhash_wide_equals_catalyst_on_adversarial_text(self, spark):
         """Unicode case-mapping and whitespace edge cases must not split
-        the Arrow (Python str ops) and Catalyst (Java/UTF8String) paths —
-        the [^a-z0-9] normalization collapses everything non-ASCII, and
-        lower() full-casemaps identically on both engines (probed:
-        final sigma, Turkish I-dot, sharp s, titlecase digraphs)."""
+        the Arrow kernel (Python str ops) from the Catalyst tokenizer
+        (Java/UTF8String) — the [^a-z0-9] normalization collapses
+        everything non-ASCII, and lower() full-casemaps identically on both
+        engines (probed: final sigma, Turkish I-dot, sharp s, titlecase
+        digraphs)."""
         from benthos_spark.ops.dedup import minhash_wide
 
         rows = [
@@ -103,6 +129,5 @@ class TestMinhashImplEquivalence:
             (7, "a b"),
         ]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        a = {tuple(r) for r in minhash_wide(docs, k=16, n=2, impl="arrow").collect()}
-        b = {tuple(r) for r in minhash_wide(docs, k=16, n=2, impl="sql").collect()}
-        assert a == b
+        got = {tuple(r) for r in minhash_wide(docs, k=16, n=2).collect()}
+        assert got == _signatures_from_catalyst_shingles(docs, 16, 2)

@@ -133,14 +133,12 @@ class TestNeardupImplValidation:
             {"doc_id": "string", "text": "string", "ts": "timestamp"},
         )
 
-    def test_unknown_impl_rejected_at_build(self):
+    # "builtin" and "exact" name no implementation: retired spellings must
+    # fail at build, not fall through to a default
+    @pytest.mark.parametrize("impl", ["extact_py", "builtin", "exact"])
+    def test_unknown_impl_rejected_at_build(self, impl):
         with pytest.raises(ValueError, match="neardup impl"):
-            self._pipe("extact_py")
-
-    def test_legacy_exact_spelling_accepted(self):
-        # pre-r5 name of the applyInPandasWithState op — must not silently
-        # become jvm (different flush semantics)
-        self._pipe("exact")
+            self._pipe(impl)
 
 
 class TestFanoutSeqOverflowGuard:

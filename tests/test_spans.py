@@ -49,21 +49,3 @@ class TestDuplicateSpans:
         for seg in plan.split("Exchange")[1:]:
             assert "text" not in seg.split("\n")[0]
 
-
-class TestImplEquivalence:
-    def test_arrow_equals_sql_impl(self, spark):
-        from benthos_spark.ops.spans import duplicate_span_stats
-
-        docs = spark.createDataFrame(
-            [
-                (1, "a b c d e f g h i j common span of eight tokens here x"),
-                (2, "zz common span of eight tokens here yy and more words"),
-                (3, "totally different text with enough tokens to span okay"),
-                (4, "short doc"),
-                (5, None),
-            ],
-            "doc_id long, text string",
-        )
-        a = {tuple(r) for r in duplicate_span_stats(docs, impl="arrow").collect()}
-        b = {tuple(r) for r in duplicate_span_stats(docs, impl="sql").collect()}
-        assert a == b

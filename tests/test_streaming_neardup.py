@@ -376,59 +376,6 @@ class TestJvmVariant:
         assert plan.lower().count("mapinpandas") <= 2
 
 
-class TestBuiltinVariant:
-    def _run_builtin(self, spark, split_at):
-        import glob
-
-        from benthos_spark.streaming.neardup import streaming_neardup_builtin
-
-        docs = _docs_df(spark)
-        src = tempfile.mkdtemp(prefix="bs_ndb_src_")
-        for i, pred in enumerate(
-            [F.col("doc_id") < split_at, F.col("doc_id") >= split_at]
-        ):
-            tmp = tempfile.mkdtemp(prefix="bs_ndb_part_")
-            docs.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = sorted(glob.glob(tmp + "/part-*.parquet"))[0]
-            shutil.copy(part, f"{src}/{i}_docs.parquet")
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        out = streaming_neardup_builtin(minhash_band_rows(stream))
-        sink = IdempotentSink(tempfile.mkdtemp(prefix="bs_ndb_sink_"))
-        run_to_sink(out, sink, tempfile.mkdtemp(prefix="bs_ndb_ckpt_"))
-        return finalize_neardup(sink.read(spark), docs).collect()
-
-    def test_builtin_equals_python_stateful(self, spark):
-        got = {
-            r["doc_id"]: (r["anchor"], r["is_keeper"])
-            for r in self._run_builtin(spark, 3)
-        }
-        want = {
-            r["doc_id"]: (r["anchor"], r["is_keeper"])
-            for r in TestStreamingNearDup()._run(spark, 3)
-        }
-        assert got == want
-
-    def test_builtin_stateful_path_is_jvm_only(self, spark):
-        from benthos_spark.streaming.neardup import streaming_neardup_builtin
-
-        docs = _docs_df(spark)
-        # everything past the band rows must be JVM (dropDuplicates +
-        # stream-stream join); the only Python is the signature kernel
-        src = tempfile.mkdtemp(prefix="bs_ndb_plan_")
-        docs.coalesce(1).write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(docs.schema).parquet(src)
-        q = streaming_neardup_builtin(minhash_band_rows(stream))
-        plan = q._jdf.queryExecution().logical().toString()
-        # one FlatMapGroupsInPandas/MapInPandas (the signature kernel); no
-        # applyInPandasWithState
-        assert "applyInPandasWithState" not in plan
-        assert plan.lower().count("mapinpandas") <= 2  # the two wm branches
-
-
 class TestSentinelStaging:
     def test_single_sentinel_staging(self, spark):
         """r6: the registered query stages ONE far-future sentinel file;
