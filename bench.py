@@ -194,7 +194,7 @@ def main() -> None:
         "queries": timings,
         "sf": sf_dir,
         "flagship_rows": n_rows,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     print(json.dumps(result))
     spark.stop()

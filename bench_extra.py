@@ -117,7 +117,7 @@ def main() -> None:
 
     result = {
         "sf": sf_dir,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": spark.sparkContext.defaultParallelism,
         "timings": timings,
         "rows": rows,
     }

@@ -21,8 +21,8 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(prog="python -m benthos_spark")
     ap.add_argument("-c", "--config", required=True, help="pipeline YAML")
     ap.add_argument("--lint", action="store_true", help="validate and exit")
-    ap.add_argument("--master", default="local[*]")
-    ap.add_argument("--shuffle-partitions", type=int, default=32)
+    ap.add_argument("--master", default=None,
+                    help="Spark master (default: sized from the host)")
     ap.add_argument("--show", type=int, default=20,
                     help="rows to print for memory outputs")
     args = ap.parse_args(argv)
@@ -44,11 +44,7 @@ def main(argv=None) -> int:
     from .engine.spec import run_spec
     from .session import get_spark
 
-    spark = get_spark(
-        "benthos-spark",
-        master=args.master,
-        shuffle_partitions=args.shuffle_partitions,
-    )
+    spark = get_spark("benthos-spark", master=args.master)
     try:
         out = run_spec(spark, spec_text)
         if out is not None:

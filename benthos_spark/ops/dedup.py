@@ -301,7 +301,9 @@ def simhash_pairs(
         for r in range(0, max_hamming + 1):
             for c in combinations(bitset, r):
                 masks.add(sum(1 << p for p in c))
-    assert all(bin(m).count("1") <= max_hamming for m in masks)
+    for m in masks:
+        if bin(m).count("1") > max_hamming:
+            raise ValueError(f"flip mask {m:#x} has more than {max_hamming} bits set")
     mask_arr = F.array(
         *[
             F.struct(

@@ -1,4 +1,15 @@
-"""SparkSession factory tuned for the engine (local test + cluster defaults)."""
+"""SparkSession factory: one rule sizes every session.
+
+When spark-submit launched this process (``PYSPARK_GATEWAY_PORT`` is set),
+the JVM already exists and its master and driver memory stand; only an
+explicit ``master=`` argument is applied. Otherwise the session is sized
+from the host: ``local[N]`` with N = ``$SPARK_GRAFT_CPUS`` or the CPUs this
+process may run on, and a driver heap of a quarter of ``MemTotal``. On a
+local master the shuffle partitions follow the context's
+``defaultParallelism``; other masters keep Spark's default. Scratch
+directories are Spark's own (``SPARK_LOCAL_DIRS``). ``extra_conf`` is
+applied last and overrides any of these.
+"""
 
 from __future__ import annotations
 
@@ -7,50 +18,48 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _xms(mem: str) -> str:
-    """Initial heap: min(8g, -Xmx) so tiny test sessions stay valid
-    (parses g/m suffixes; anything unparseable passes through)."""
-    try:
-        v = mem.lower()
-        mb = int(v[:-1]) * (1024 if v.endswith("g") else 1) if v[-1] in "gm" else None
-        if mb is not None and mb > 8 * 1024:
-            return "8g"
-    except (ValueError, IndexError):
-        pass
-    return mem
+def _mem_total_kb() -> int:
+    with open("/proc/meminfo") as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1])
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
+def session_conf(
+    master: str | None, extra_conf: dict | None, environ, cpus: int, mem_total_kb: int
+) -> dict:
+    """The master, driver memory and ``extra_conf`` the module rule applies,
+    given the environment, the usable CPU count and ``MemTotal`` in kB."""
+    conf = {}
+    if "PYSPARK_GATEWAY_PORT" in environ:
+        if master:
+            conf["spark.master"] = master
+    else:
+        n = environ.get("SPARK_GRAFT_CPUS") or cpus
+        conf["spark.master"] = master or environ.get("SPARK_MASTER") or f"local[{n}]"
+        conf["spark.driver.memory"] = f"{mem_total_kb // 4 // 1024}m"
+    conf.update(extra_conf or {})
+    return conf
 
 
 def get_spark(
     app_name: str = "benthos_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build a SparkSession with the engine's defaults.
 
-    On a real cluster the master/memory knobs come from spark-submit; locally
-    we default to ``local[$SPARK_GRAFT_CPUS]``. AQE is on (skew-join handling
-    and runtime coalescing are part of the scale story), Arrow is on (all
-    Python-side kernels are Arrow-batched), timezone pinned UTC so event-time
-    windows are deterministic.
+    Master, driver memory and shuffle partitions follow the module rule. AQE
+    is on (skew-join handling and runtime coalescing are part of the scale
+    story), Arrow is on (all Python-side kernels are Arrow-batched), timezone
+    pinned UTC so event-time windows are deterministic.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        n = cpus if master.startswith("local[") else "200"
-        try:
-            shuffle_partitions = int(master[6:-1]) if master != "local[*]" else os.cpu_count()
-        except ValueError:
-            shuffle_partitions = int(n) if str(n).isdigit() else 32
-    mem = os.environ.get("SPARK_DRIVER_MEMORY", "40g")
-    local_dir = os.environ.get("SPARK_LOCAL_DIRS")
-    if local_dir is None and master.startswith("local") and os.path.isdir("/dev/shm"):
-        # single-node shuffle files on tmpfs; real clusters pass their own dirs
-        local_dir = "/dev/shm/spark_local"
+    conf = session_conf(
+        master, extra_conf, os.environ, len(os.sched_getaffinity(0)), _mem_total_kb()
+    )
     b = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -58,19 +67,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", mem)
-        # Pre-size and pre-fault a working-set-sized initial heap: without
-        # it the first 20M-row queries in a fresh JVM spend 10-20 s
-        # page-faulting/zeroing freshly-grown heap INSIDE the timed region
-        # (measured rep progression [17.3, 26.4, 3.1, 3.1] s with lazy
-        # -Xms40g vs [9.6, 4.8, 3.1] with -Xms8g + AlwaysPreTouch; a full
-        # 40g pretouch costs 30-120 s of JVM startup, the wrong trade for
-        # short-lived test sessions). -Xmx stays at `mem` so heavy state /
-        # wide joins still have headroom; growth beyond 8g faults lazily.
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{_xms(mem)} -XX:+AlwaysPreTouch",
-        )
         # NOTE: spark.sql.streaming.statefulOperator.checkCorrectness.enabled
         # stays at its default (true). Pipelines that chain stateful operators
         # in a shape Spark flags must opt out explicitly via extra_conf with a
@@ -89,10 +85,11 @@ def get_spark(
             "true",
         )
     )
-    if local_dir:
-        b = b.config("spark.local.dir", local_dir)
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    if sc.master.startswith("local") and "spark.sql.shuffle.partitions" not in conf:
+        spark.conf.set("spark.sql.shuffle.partitions", str(sc.defaultParallelism))
+    sc.setLogLevel("WARN")
     return spark

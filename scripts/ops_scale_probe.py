@@ -283,8 +283,7 @@ def main():
 
     from benthos_spark.session import get_spark
 
-    spark = get_spark("ops_scale_probe", master=f"local[{cpus}]",
-                      shuffle_partitions=int(cpus))
+    spark = get_spark("ops_scale_probe", master=f"local[{cpus}]")
     print(f"level {small:,}:")
     a = run_level(spark, small, probes_fn=probes_fn)
     print(f"level {big:,}:")

@@ -7,10 +7,9 @@ import pytest
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # keep test JVM small
     from benthos_spark.session import get_spark
 
-    s = get_spark(app_name="benthos_spark_tests", shuffle_partitions=8)
+    s = get_spark(app_name="benthos_spark_tests")
     yield s
 
 

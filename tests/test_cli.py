@@ -1,10 +1,11 @@
 """The ``python -m benthos_spark`` CLI (the reference's ``benthos -c`` /
 ``benthos lint`` surface) — real subprocess invocations."""
 
+import os
 import subprocess
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 GOOD = """
 input:
@@ -56,7 +57,6 @@ class TestCli:
     def test_run_memory_output(self, tmp_path):
         p = tmp_path / "good.yaml"
         p.write_text(GOOD)
-        r = run_cli(["-c", str(p), "--master", "local[2]",
-                     "--shuffle-partitions", "2"])
+        r = run_cli(["-c", str(p), "--master", "local[2]"])
         assert r.returncode == 0, r.stderr[-2000:]
         assert "HELLO WORLD" in r.stdout

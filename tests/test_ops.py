@@ -1,5 +1,7 @@
 """Unit tests for the training-data operator suite on crafted near-dup data."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,6 +19,8 @@ from benthos_spark.ops.multimodal import (
 )
 from benthos_spark.ops.similarity import ann_topk_bruteforce, ann_topk_lsh
 from benthos_spark.ops.textstats import lang_id, quality_score, token_count
+
+EXAMPLES = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "examples")
 
 BASE = "the quick brown fox jumps over the lazy dog again and again today"
 DOCS = [
@@ -261,7 +265,7 @@ class TestSpecWindowDedupe:
     def test_yaml_window_dedupe_batch(self, spark):
         from benthos_spark.engine.spec import run_spec
 
-        with open("/root/repo/examples/batch_dedup_report.yaml") as f:
+        with open(os.path.join(EXAMPLES, "batch_dedup_report.yaml")) as f:
             spec = f.read()
         df = run_spec(spark, spec)
         rows = df.collect()
@@ -275,7 +279,7 @@ class TestSpecWindowDedupe:
         from benthos_spark.streaming.sink import IdempotentSink
         from benthos_spark.streaming.source import write_pages_input
 
-        with open("/root/repo/examples/flagship_streaming.yaml") as f:
+        with open(os.path.join(EXAMPLES, "flagship_streaming.yaml")) as f:
             spec = _yaml.safe_load(f)
         in_dir = str(tmp_path / "in")
         # ~83 minutes of event time so several 10-minute windows pass the

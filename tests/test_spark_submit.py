@@ -69,3 +69,27 @@ def test_submit_with_pyfiles_zip(tmp_path):
     res = json.loads(line)
     assert res["input_rows"] == 20000
     assert res["rows"] > 0
+
+
+@pytest.mark.slow
+def test_get_spark_keeps_spark_submit_settings(tmp_path):
+    """Under spark-submit, get_spark takes the submitted master and memory
+    and sizes shuffle partitions from the submitted parallelism."""
+    script = tmp_path / "probe.py"
+    script.write_text(
+        "from benthos_spark.session import get_spark\n"
+        "s = get_spark('submit_probe'); sc = s.sparkContext\n"
+        "print('PROBE', sc.master, sc.defaultParallelism, "
+        "s.conf.get('spark.sql.shuffle.partitions'), sc.getConf().get('spark.driver.memory'))\n"
+    )
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (REPO, env.get("PYTHONPATH")) if p)
+    env["PYSPARK_PYTHON"] = sys.executable
+    env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    out = subprocess.run(
+        [_spark_submit(), "--master", "local[2]", "--driver-memory", "1g", str(script)],
+        capture_output=True, text=True, cwd=str(tmp_path), env=env, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    line = [l for l in out.stdout.splitlines() if l.startswith("PROBE ")][-1]
+    assert line.split()[1:] == ["local[2]", "2", "2", "1g"]

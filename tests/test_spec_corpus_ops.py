@@ -3,11 +3,14 @@ native pipeline stages (pii_redact, url_canonicalize, boilerplate,
 stratified_sample, top_k, rollup, asof_join) without dropping to Python."""
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from benthos_spark.engine.spec import lint_spec, run_spec
+
+EXAMPLES = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "examples")
 
 
 @pytest.mark.spark
@@ -243,7 +246,7 @@ class TestSpecCorpusOps:
 
     def test_example_specs_lint_clean(self):
         for name in ("corpus_curation", "cep_funnel", "streaming_neardup"):
-            with open(f"/root/repo/examples/{name}.yaml") as f:
+            with open(os.path.join(EXAMPLES, f"{name}.yaml")) as f:
                 assert lint_spec(f.read()) == [], name
 
     def test_example_streaming_neardup_runs(self, spark, tmp_path):
@@ -255,7 +258,7 @@ class TestSpecCorpusOps:
         from benthos_spark.streaming.neardup import finalize_neardup
         from benthos_spark.streaming.sink import IdempotentSink
 
-        with open("/root/repo/examples/streaming_neardup.yaml") as f:
+        with open(os.path.join(EXAMPLES, "streaming_neardup.yaml")) as f:
             spec = yaml.safe_load(f)
         docs = spark.createDataFrame(
             [(1, "the quick brown fox jumps over the lazy dog today"),
@@ -300,7 +303,7 @@ class TestSpecCorpusOps:
     def test_example_corpus_curation_runs(self, spark, tmp_path):
         import yaml
 
-        with open("/root/repo/examples/corpus_curation.yaml") as f:
+        with open(os.path.join(EXAMPLES, "corpus_curation.yaml")) as f:
             spec = yaml.safe_load(f)
         out_dir = str(tmp_path / "curated")
         spec["output"]["parquet"]["path"] = out_dir
@@ -542,7 +545,7 @@ class TestTrainingDataPipelineExample:
     def test_example_runs_end_to_end(self, spark, tmp_path):
         import yaml
 
-        with open("/root/repo/examples/training_data_pipeline.yaml") as f:
+        with open(os.path.join(EXAMPLES, "training_data_pipeline.yaml")) as f:
             spec = yaml.safe_load(f)
         assert lint_spec(spec) == []
         out_dir = str(tmp_path / "tdp")
