@@ -11,10 +11,14 @@ Two execution surfaces over the same semantic layer:
   per-message closure interpretation (lib/pipeline/processor.go:84), kept
   only for constructs that genuinely need dynamic JSON / batch-local state.
 
-Scale note: frame mode shuffles on batch_id (analogue of pipeline.threads
-parallelism, lib/pipeline/constructor.go:24-31); batch-scoped state never
-crosses a batch, so group-level parallelism is safe and skew is bounded by
-batch size, not key popularity.
+Scale note: frame mode over a ``file``/``files`` input needs no shuffle:
+each whole file is framed into batches and run through the chain in one
+mapInPandas pass (``run_file_frame_pipeline``), the analogue of the
+reference's one goroutine per file. Other frame sources shuffle on batch_id
+(analogue of pipeline.threads parallelism,
+lib/pipeline/constructor.go:24-31); batch-scoped state never crosses a
+batch, so group-level parallelism is safe and skew is bounded by batch
+size, not key popularity.
 """
 
 from __future__ import annotations
@@ -57,34 +61,53 @@ def _build_procs_cached(conf_json: str):
     return [build_processor(p) for p in conf]
 
 
+FRAME_OUT_COLUMNS = FRAME_OUT_SCHEMA.fieldNames()
+
+
+def _batch_rows(procs, batch_id: int, parts: List[Part]) -> list:
+    """Run one input batch through the chain with a fresh Env (batch-scoped
+    state never crosses a batch); one FRAME_OUT row per output part."""
+    env = Env(interp=Interpreter(), resources=Resources())
+    return [
+        (batch_id, ob, seq, part.content, part.meta)
+        for ob, batch in enumerate(execute_all(procs, parts, env))
+        for seq, part in enumerate(batch)
+    ]
+
+
 def _kernel(conf_json: str):
     """Per-group kernel: one input batch -> 0..N output batches."""
     import pandas as pd
 
     def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
         procs = _build_procs_cached(conf_json)
-        env = Env(interp=Interpreter(), resources=Resources())
         pdf = pdf.sort_values("seq")
         batch_id = int(pdf["batch_id"].iloc[0]) if len(pdf) else 0
         parts = [
             Part(bytes(c) if c is not None else b"", dict(m) if m is not None else {})
             for c, m in zip(pdf["content"], pdf["meta"])
         ]
-        out_rows = []
-        for ob, batch in enumerate(execute_all(procs, parts, env)):
-            for seq, part in enumerate(batch):
-                out_rows.append(
-                    {
-                        "batch_id": batch_id,
-                        "out_batch": ob,
-                        "seq": seq,
-                        "content": part.content,
-                        "meta": part.meta,
-                    }
-                )
-        return pd.DataFrame(
-            out_rows, columns=["batch_id", "out_batch", "seq", "content", "meta"]
-        )
+        return pd.DataFrame(_batch_rows(procs, batch_id, parts), columns=FRAME_OUT_COLUMNS)
+
+    return fn
+
+
+def _file_kernel(conf_json: str, framer):
+    """mapInPandas kernel over ``binaryFile`` rows: each whole file is cut
+    into its batches by ``framer`` (streaming.source.LineFramer) and each
+    batch runs through the chain exactly as the grouped kernel runs it."""
+    import pandas as pd
+
+    def fn(it):
+        procs = _build_procs_cached(conf_json)
+        for pdf in it:
+            rows = []
+            for uri, content in zip(pdf["path"], pdf["content"]):
+                for batch_id, local, segs in framer(uri, content):
+                    parts = [Part(seg, {"path": local}) for seg in segs]
+                    rows.extend(_batch_rows(procs, batch_id, parts))
+            if rows:
+                yield pd.DataFrame(rows, columns=FRAME_OUT_COLUMNS)
 
     return fn
 
@@ -265,6 +288,17 @@ def run_frame_pipeline(df: DataFrame, processors_conf: List[Dict[str, Any]]) -> 
             _rowlocal_kernel(conf_json, side_effecting), FRAME_OUT_SCHEMA
         )
     return df.groupBy("batch_id").applyInPandas(_kernel(conf_json), FRAME_OUT_SCHEMA)
+
+
+def run_file_frame_pipeline(file_input, processors_conf: List[Dict[str, Any]]) -> DataFrame:
+    """Frame mode over a ``file``/``files`` input (streaming.source.FileInput)
+    in one Python pass per file: one mapInPandas over the binaryFile rows
+    splits each file into its batches and runs the chain on each, emitting
+    the same rows as ``run_frame_pipeline(file_input.frames(), ...)``. A
+    binaryFile row holds a whole file and a batch never spans files, so no
+    batch_id shuffle and no second Python UDF are needed."""
+    kernel = _file_kernel(_json.dumps(processors_conf), file_input.framer)
+    return file_input.files.mapInPandas(kernel, FRAME_OUT_SCHEMA)
 
 
 def frame_from_strings(spark, docs: Iterable[bytes], batch_id: int = 0) -> DataFrame:

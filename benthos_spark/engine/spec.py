@@ -33,7 +33,7 @@ import yaml
 from pyspark.sql import DataFrame, SparkSession
 
 from ..bloblang.compiler import CompileError
-from .spark_exec import FRAME_SCHEMA, NativePipeline, run_frame_pipeline
+from .spark_exec import FRAME_SCHEMA, NativePipeline, run_file_frame_pipeline, run_frame_pipeline
 
 
 class Stream:
@@ -42,6 +42,7 @@ class Stream:
     def __init__(self, spark: SparkSession, spec: Dict[str, Any]):
         self.spark = spark
         self.spec = spec
+        self.file_input = None  # the FileInput of a file/files input
         self.df = self._build_input(spec.get("input", {}))
         procs = (spec.get("pipeline") or {}).get("processors", []) or []
         self.mode = "native"
@@ -80,7 +81,10 @@ class Stream:
 
                 for p in procs:
                     build_processor(p)
-                self.df = run_frame_pipeline(self.df, procs)
+                if self.file_input is not None:
+                    self.df = run_file_frame_pipeline(self.file_input, procs)
+                else:
+                    self.df = run_frame_pipeline(self.df, procs)
                 self.mode = "frame"
 
     @staticmethod
@@ -130,14 +134,15 @@ class Stream:
                 start_oldest=bool(body.get("start_from_oldest", True)),
             )
         if kind in ("file", "files"):
-            from ..streaming.source import file_lines_input
+            from ..streaming.source import FileInput
 
-            return file_lines_input(
+            self.file_input = FileInput(
                 self.spark,
                 body["path"],
                 delimiter=body.get("delimiter") or "\n",
                 multipart=bool(body.get("multipart", False)),
             )
+            return self.file_input.frames()
         if kind == "stream":
             from ..streaming.source import pages_file_stream
 

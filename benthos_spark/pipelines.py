@@ -46,11 +46,10 @@ def pages_windowed_dedupe_agg(
     ``text_len`` column (== length(text); ingestion layouts routinely
     materialize n_chars — the harness documents table does, and the pages
     fixture now does, equality test-pinned) is trusted, skipping the
-    per-row re-count. The column, when present, must be POPULATED — a NULL
-    text_len filters like an absent length (the row drops); reading a
-    pre-text_len parquet dir through the new PAGES_DDL would surface as
-    all-NULL, so legacy dirs must be read with the legacy 6-column schema
-    (they are all transient staging dirs in this repo). Computing
+    per-row re-count. A NULL text_len falls back to length(text), so a
+    partially populated column (or a pre-text_len parquet dir read through
+    PAGES_DDL, which surfaces it as all-NULL) loses no rows; a populated
+    one costs one null check per row. Computing
     length() of a ~500-char string per row was
     60% of flagship wall time at 20M rows — and because the length filter
     sits below the projection, Catalyst's filter pushdown re-inlined the
@@ -58,16 +57,14 @@ def pages_windowed_dedupe_agg(
     (the §4.4 duplicate-evaluation shape, with plain expressions). A
     precomputed column is a plain attribute: one cheap comparison, no
     double eval."""
+    text_len = F.length("text")
     if "text_len" in df.columns:
-        slim = df.filter(F.col("text_len") >= min_text_len).select(
-            "url", "warc_ts", "seq", "text_len"
-        )
-    else:
-        slim = (
-            df.withColumn("text_len", F.length("text"))
-            .filter(F.col("text_len") >= min_text_len)
-            .select("url", "warc_ts", "seq", "text_len")
-        )
+        text_len = F.coalesce(F.col("text_len"), text_len)
+    slim = (
+        df.withColumn("text_len", text_len)
+        .filter(F.col("text_len") >= min_text_len)
+        .select("url", "warc_ts", "seq", "text_len")
+    )
     if df.isStreaming:
         deduped = (
             slim.withWatermark("warc_ts", watermark or "30 minutes")

@@ -249,77 +249,120 @@ def read_warc(
     return files.mapInPandas(kernel, out_schema)
 
 
+def _matched_files(path: str) -> list[str]:
+    """The files a ``file`` input reads, in the order that numbers them: a
+    directory's regular files, a glob's matches, or the one named file.
+    Raises ``ValueError`` naming ``path`` when nothing matches — an input
+    that silently reads zero messages hides a typo in the config."""
+    import glob as _glob
+
+    if os.path.isdir(path):
+        paths = [p for p in _glob.glob(os.path.join(path, "*")) if os.path.isfile(p)]
+    elif any(ch in path for ch in "*?["):
+        paths = [p for p in _glob.glob(path) if os.path.isfile(p)]
+    else:
+        paths = [path] if os.path.isfile(path) else []
+    if not paths:
+        raise ValueError(f"file input: no file matches {path!r}")
+    return sorted(paths)
+
+
+class LineFramer:
+    """The file input's framing rules (lib/input/file.go:38-89 +
+    lib/input/reader/lines.go:185-215), applied to one whole file: the
+    payload splits on ``delimiter``; without multipart every non-empty
+    segment is its own single-part batch (empty segments skipped); with
+    multipart an empty segment flushes the current batch, and a trailing
+    unterminated batch flushes at EOF.
+
+    Batch ids are ``file ordinal << 32 | batch index within the file`` —
+    a pure function of the sorted file list and the file's bytes, so they
+    do not depend on how files are packed into tasks or Arrow batches.
+    Holds no Spark objects: it ships to the Python workers."""
+
+    def __init__(self, paths: list[str], delimiter: str = "\n", multipart: bool = False):
+        self.fid = {os.path.abspath(p): i for i, p in enumerate(paths)}
+        self.delimiter = delimiter.encode("utf-8")
+        self.multipart = multipart
+
+    def __call__(self, uri, content: bytes):
+        """Yield ``(batch_id, local_path, parts)`` for each batch of the file
+        at ``uri`` (a ``binaryFile`` path) whose bytes are ``content``."""
+        from urllib.parse import unquote, urlparse
+
+        local = unquote(urlparse(str(uri)).path)
+        base = self.fid[os.path.abspath(local)] << 32
+        segs = bytes(content).split(self.delimiter)
+        if segs and segs[-1] == b"":
+            segs.pop()  # trailing delimiter, not an empty segment
+        if not self.multipart:
+            for i, seg in enumerate(s for s in segs if s):
+                yield base + i, local, [seg]
+            return
+        bidx, batch = 0, []
+        for seg in segs:
+            if seg:
+                batch.append(seg)
+            elif batch:
+                yield base + bidx, local, batch
+                bidx, batch = bidx + 1, []
+        if batch:
+            yield base + bidx, local, batch
+
+
+class FileInput:
+    """A ``file``/``files`` input: the matched files as ``binaryFile`` rows
+    ``(path, content)`` — one row holds one whole file, so a batch never
+    spans rows — plus the framer that cuts each file into batches.
+
+    ``frames()`` gives the standalone message frames; frame mode over a
+    file input instead runs the framer and the processor chain in one
+    Python pass per file (``engine.spark_exec.run_file_frame_pipeline``)."""
+
+    def __init__(self, spark: SparkSession, path: str, delimiter: str = "\n", multipart: bool = False):
+        paths = _matched_files(path)
+        self.framer = LineFramer(paths, delimiter, multipart)
+        self.files = spark.read.format("binaryFile").load(paths).select("path", "content")
+
+    def frames(self) -> DataFrame:
+        """The message frames ``(batch_id, seq, content, meta)``, one row per
+        part, with ``meta['path']`` = the source file."""
+        from ..engine.spark_exec import FRAME_SCHEMA
+
+        framer = self.framer
+
+        def split_files(pdf_iter):
+            import pandas as pd
+
+            for pdf in pdf_iter:
+                rows = [
+                    (batch_id, seq, seg, {"path": local})
+                    for uri, content in zip(pdf["path"], pdf["content"])
+                    for batch_id, local, segs in framer(uri, content)
+                    for seq, seg in enumerate(segs)
+                ]
+                yield pd.DataFrame(rows, columns=FRAME_SCHEMA.fieldNames())
+
+        return self.files.mapInPandas(split_files, FRAME_SCHEMA)
+
+
 def file_lines_input(
     spark: SparkSession,
     path: str,
     delimiter: str = "\n",
     multipart: bool = False,
 ) -> DataFrame:
-    """file input with custom delimiter + multipart batching
-    (/root/reference/lib/input/file.go:38-89 + lib/input/reader/lines.go:185-215):
-    the payload splits on ``delimiter``; without multipart every non-empty
-    segment is its own single-part batch (empty segments skipped); with
-    multipart an empty segment flushes the current batch, and a trailing
-    unterminated batch flushes at EOF.
+    """file input with custom delimiter + multipart batching, as message
+    frames (batch_id, seq, content, meta) — framing rules and batch ids in
+    ``LineFramer``, ``meta['path']`` = the source file. Parallelism unit =
+    one file per task (the reference reads one file in one goroutine).
 
-    Output is the schemaless message-frame schema (batch_id, seq, content,
-    meta) — ``meta['path']`` carries the source file. Parallelism unit = one
-    file per task (the reference reads one file in one goroutine; here N
-    files decode in parallel and batch ids stay deterministic via the sorted
-    file ordinal in the high bits)."""
-    import glob as _glob
-
-    from pyspark.sql import functions as F
-
-    from ..engine.spark_exec import FRAME_OUT_SCHEMA, FRAME_SCHEMA  # noqa: F401
-
-    if os.path.isdir(path):
-        paths = sorted(p for p in _glob.glob(os.path.join(path, "*")) if os.path.isfile(p))
-    elif any(ch in path for ch in "*?["):
-        paths = sorted(p for p in _glob.glob(path) if os.path.isfile(p))
-    else:
-        paths = [path]
-    fid = {os.path.abspath(p): i for i, p in enumerate(paths)}
-    delim_b = delimiter.encode("utf-8")
-
-    raw = spark.read.format("binaryFile").load(paths)
-
-    def split_files(pdf_iter):
-        import pandas as pd
-        from urllib.parse import unquote, urlparse
-
-        for pdf in pdf_iter:
-            rows = []
-            for uri, content in zip(pdf["path"], pdf["content"]):
-                local = unquote(urlparse(str(uri)).path)
-                base = fid[os.path.abspath(local)] << 32
-                segs = bytes(content).split(delim_b)
-                if segs and segs[-1] == b"":
-                    segs.pop()  # trailing delimiter, not an empty segment
-                meta = {"path": local}
-                if multipart:
-                    bidx, seq = 0, 0
-                    for seg in segs:
-                        if len(seg) == 0:
-                            if seq > 0:
-                                bidx += 1
-                                seq = 0
-                            continue
-                        rows.append((base + bidx, seq, seg, meta))
-                        seq += 1
-                else:
-                    # per-file counter (not len(rows), which accumulates
-                    # across files in the same Arrow batch) so batch ids are
-                    # a pure function of (file ordinal, line index)
-                    bidx = 0
-                    for seg in segs:
-                        if len(seg) == 0:
-                            continue
-                        rows.append((base + bidx, 0, seg, meta))
-                        bidx += 1
-            yield pd.DataFrame(rows, columns=["batch_id", "seq", "content", "meta"])
-
-    return raw.select("path", "content").mapInPandas(split_files, FRAME_SCHEMA)
+    The native and frame-native compile paths read these frames. When a
+    chain falls back to the frame interpreter, ``engine.spec.Stream`` does
+    not use them: it runs ``FileInput.framer`` and the chain in one
+    ``mapInPandas`` over the files, with no batch_id shuffle. Raises
+    ``ValueError`` when ``path`` matches no file."""
+    return FileInput(spark, path, delimiter, multipart).frames()
 
 
 def has_kafka(spark: SparkSession) -> bool:

@@ -125,6 +125,24 @@ def test_pipeline_precomputed_len_equals_recomputed(spark):
     assert without.exceptAll(with_col).count() == 0
 
 
+def test_pipeline_null_text_len_falls_back_to_length(spark):
+    """A NULL text_len must not drop its row: the pipeline over an input
+    whose text_len is NULL on every other row equals the recomputed one."""
+    from benthos_spark.fixtures import pages
+    from benthos_spark.pipelines import pages_windowed_dedupe_agg
+
+    src = pages(spark, 20_000, n_hosts=100, rows_per_sec=100)
+    holes = src.withColumn(
+        "text_len", F.when(F.col("seq") % 2 == 0, F.col("text_len"))
+    )
+    assert holes.filter(F.col("text_len").isNull()).count() == 10_000
+    with_holes = pages_windowed_dedupe_agg(holes, hash_key=True)
+    without = pages_windowed_dedupe_agg(src.drop("text_len"), hash_key=True)
+    assert with_holes.exceptAll(without).count() == 0
+    assert without.exceptAll(with_holes).count() == 0
+    assert with_holes.agg(F.sum("n_pages")).first()[0] > 0
+
+
 def test_hex_equals_conv_for_nonnegative_longs(spark):
     bad = (
         spark.range(0, 500_000)
